@@ -112,7 +112,7 @@ def calibration(spark) -> float:
     return round(min(once(), once()), 4)
 
 
-def bench_streaming(spark, sf_dir: str, backend: str | None = None) -> dict:
+def bench_streaming(spark, sf_dir: str) -> dict:
     """Streaming leg of the BASELINE.md protocol: the 3-rule pipeline
     over a file stream of the events table, split into multiple files so
     several micro-batches execute; reports throughput + micro-batch
@@ -120,15 +120,9 @@ def bench_streaming(spark, sf_dir: str, backend: str | None = None) -> dict:
 
     Measured on the SCALE-PATH state store: the RocksDB provider
     (changelog checkpointing, memory-bounded native state — the store
-    that survives 100 TB key cardinality). ``backend=None`` auto-picks
-    the per-key API — transformWithStateInPandas when its protobuf
-    dependency is importable, applyInPandasWithState otherwise
-    (identical alerts either way — tests/test_streaming_tws.py);
-    ``backend="bucketed"`` runs the key-packing backend (one state blob
-    per xxhash64 bucket — the 100 TB cardinality path, 8.15× the
-    per-key backend at 295 k keys, STRESS_r05_streaming.json; alerts
-    byte-identical, tests/test_streaming_bucketed.py). The JSON records
-    which combination actually ran."""
+    that survives 100 TB key cardinality), with the default
+    arrival-order, key-packed stateful detector (one state blob per
+    xxhash64 bucket of the key)."""
     import glob
     import shutil
     import tempfile
@@ -138,13 +132,6 @@ def bench_streaming(spark, sf_dir: str, backend: str | None = None) -> dict:
     from stream_sentinel_spark.sources.batch import load_table
     from stream_sentinel_spark.streaming import compile_rules_streaming, read_file_stream
 
-    if backend is None:
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-
-            backend = "tws"
-        except ImportError:
-            backend = "aiws"
     rocksdb = (
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
@@ -184,7 +171,7 @@ def bench_streaming(spark, sf_dir: str, backend: str | None = None) -> dict:
         )
         walerts = compile_rules_streaming(
             wstream, DEFAULT_RULES, key_field="user_id", time_col="ts",
-            order_cols=("event_id",), backend=backend,
+            order_cols=("event_id",),
         )
         wq = (
             walerts.writeStream.format("noop")
@@ -202,7 +189,7 @@ def bench_streaming(spark, sf_dir: str, backend: str | None = None) -> dict:
         )
         alerts = compile_rules_streaming(
             stream, DEFAULT_RULES, key_field="user_id", time_col="ts",
-            order_cols=("event_id",), backend=backend,
+            order_cols=("event_id",),
         )
         t0 = time.perf_counter()
         q = (
@@ -225,7 +212,6 @@ def bench_streaming(spark, sf_dir: str, backend: str | None = None) -> dict:
             "events_per_sec": round(n_events / wall, 1),
             "alerts": snap["anomalies_detected_total"],
             "microbatch_ms": snap["processing_latency_ms"],
-            "state_backend": backend,
             "state_store": "rocksdb",
         }
     finally:
@@ -341,18 +327,6 @@ def main() -> None:
         log(f"STREAMING BENCH FAIL: {exc}")
         streaming = {"error": str(exc)[:200]}
 
-    # second streaming line: the key-packing backend at the same
-    # protocol shape — the 100 TB cardinality path promoted from stress
-    # artifact to the official bench (round-5 verdict item 4); at the
-    # protocol's 1,500-key shape the two should be within noise, the
-    # packed backend's 8× advantage appears past ~100k keys
-    # (STRESS_r05_streaming.json)
-    try:
-        streaming_bucketed = bench_streaming(spark, sf_dir, backend="bucketed")
-    except Exception as exc:
-        log(f"STREAMING BUCKETED BENCH FAIL: {exc}")
-        streaming_bucketed = {"error": str(exc)[:200]}
-
     calib_post = calibration(spark)
     try:
         load_post = list(os.getloadavg())
@@ -371,7 +345,6 @@ def main() -> None:
                 "cpus": cpus,
                 "spark": spark.version,
                 "streaming": streaming,
-                "streaming_bucketed": streaming_bucketed,
                 "warm_pass_sec": warm_sec,
                 "calibration_sec": {"pre": calib_pre, "post": calib_post},
                 "loadavg": {"pre": load_pre, "post": load_post},
@@ -442,12 +415,10 @@ def main() -> None:
                 if isinstance(streaming, dict)
                 else None
             ),
-            "eps_bucketed": (
-                streaming_bucketed.get("events_per_sec")
-                if isinstance(streaming_bucketed, dict)
-                else None
-            ),
             "calib": [round(calib_pre, 2), round(calib_post, 2)],
+            # host 1-min loadavg at start/end: contention vs code from
+            # the parsed line alone (the full line above may be cut)
+            "load": [round(la[0], 2) if la else None for la in (load_pre, load_post)],
             "queries": qmap,
         }
 

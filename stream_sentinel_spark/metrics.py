@@ -17,6 +17,7 @@ Spark mapping (SURVEY §2.4 W4/W5):
 
 from __future__ import annotations
 
+import itertools
 import threading
 from collections import deque
 
@@ -30,12 +31,30 @@ RESERVOIR_SIZE = 350
 EVENTS_PROCESSED = "events_processed_total"
 ANOMALIES_DETECTED = "anomalies_detected_total"
 
+#: Observed-metric name prefix under which a streaming detector query
+#: publishes its input event count (attached by ``compile_rules_streaming``).
+STREAM_EVENTS_OBSERVATION = "sentinel_stream_events"
+_stream_events_ids = itertools.count()
+
 
 def observe_events(df: DataFrame, name: str = "sentinel_events"):
     """Attach an events-processed counter to a frame (W5). Returns
     ``(df, observation)``; read ``observation.get`` after an action."""
     obs = Observation(name)
     return df.observe(obs, F.count(F.lit(1)).alias(EVENTS_PROCESSED)), obs
+
+
+def observe_stream_events(events: DataFrame) -> DataFrame:
+    """Count a streaming frame's input rows once per micro-batch, as an
+    observed metric named ``STREAM_EVENTS_OBSERVATION_<n>``. A source
+    that feeds several branches is scanned once per branch, and Spark's
+    per-source ``numInputRows`` sums those scans; this count does not,
+    because every copy of one observation reports the same per-scan
+    total. Each call takes a fresh name: Spark rejects two different
+    observations of one name in a query, e.g. two stateless detectors
+    unioned."""
+    name = f"{STREAM_EVENTS_OBSERVATION}_{next(_stream_events_ids)}"
+    return events.observe(name, F.count(F.lit(1)).alias(EVENTS_PROCESSED))
 
 
 def observe_alerts(alerts: DataFrame, name: str = "sentinel_alerts"):
@@ -138,6 +157,23 @@ def grouped_percentiles(
     )
 
 
+def _events_in(progress) -> int:
+    """Input events of one micro-batch. The detectors' own observed
+    counts win (see :func:`observe_stream_events`): Spark's per-source
+    ``numInputRows`` sums every scan of a source, so a source read by
+    both the stateless and the stateful branch reports twice its rows.
+    Without them, each distinct source ``description`` counts once."""
+    observed = [
+        row[EVENTS_PROCESSED]
+        for name, row in (progress.observedMetrics or {}).items()
+        if name.startswith(STREAM_EVENTS_OBSERVATION)
+    ]
+    if observed:
+        return sum(observed)
+    rows = {s.description: s.numInputRows for s in progress.sources}
+    return sum(rows.values())
+
+
 class SentinelMetricsListener(StreamingQueryListener):
     """Streaming metrics harvester.
 
@@ -165,11 +201,12 @@ class SentinelMetricsListener(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:  # noqa: N802
         p = event.progress
         with self._lock:
-            # events in = sum of source input rows; anomalies out = sink
+            # events in = the query's observed event count, else the
+            # input rows of each distinct source; anomalies out = sink
             # output rows (the alert stream's sink), exactly the two
             # counters the reference increments per element
             # (AnomalyProcessFunction.java:128,140)
-            self.events_processed += sum(s.numInputRows for s in p.sources)
+            self.events_processed += _events_in(p)
             if p.sink and p.sink.numOutputRows and p.sink.numOutputRows > 0:
                 self.anomalies_detected += p.sink.numOutputRows
             duration = (p.durationMs or {}).get("triggerExecution")

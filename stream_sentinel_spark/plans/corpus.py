@@ -5661,16 +5661,16 @@ def _stream_parts(spark, n_rows: int, target_rows: int = 25_000, floor: int = 4)
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def _streaming_detect(spark, sf, *, backend: str, watermark: str | None):
+def _streaming_detect(spark, sf, *, watermark: str | None):
     """Shared engine body of x84/x86: run the 3-rule pipeline through
     Structured Streaming over the events table and return the drained
     alerts projected to the batch oracle's columns.
 
-    ``watermark=None`` runs the arrival-order backends (one source file
-    → one availableNow micro-batch; multi-batch delivery parity is
-    pinned separately in tests/test_streaming_parity.py and
+    ``watermark=None`` runs the arrival order (one source file → one
+    availableNow micro-batch; multi-batch delivery parity is pinned
+    separately in tests/test_streaming_parity.py and
     test_streaming_bucketed.py). A non-None watermark runs the
-    EVENT-TIME mode, which only FLUSHES buffered events when the
+    EVENT-TIME order, which only FLUSHES buffered events when the
     watermark passes them — availableNow ends with the last data
     batch, so two trailing sentinel files (ts beyond max(ts) + delay;
     the second carries the first's watermark into effect) drain the
@@ -5695,12 +5695,13 @@ def _streaming_detect(spark, sf, *, backend: str, watermark: str | None):
         read_file_stream,
     )
 
+    event_time = watermark is not None
     ev = _t(spark, sf, "events")
     tmp = tempfile.mkdtemp(prefix="ss_xstream_")
     out_dir = tempfile.mkdtemp(prefix="ss_xstream_out_")
     try:
         ev.coalesce(1).write.parquet(f"{tmp}/ev")
-        if watermark is not None:
+        if event_time:
             # watermark advance is data-driven: append sentinel events
             # 10 s and 20 s past max(ts) (NULL value — invisible to the
             # value rules; a single event per window never trips the
@@ -5743,27 +5744,27 @@ def _streaming_detect(spark, sf, *, backend: str, watermark: str | None):
                     st = _os.stat(f)
                     _os.utime(f, (st.st_atime, base_mtime + 2.0 * (i + 1)))
                 seen = now
-        # Python-state backends scale with ROWS of per-partition Python
-        # work, not just per-partition state-store overhead, so their
-        # partition target is much smaller than the JVM-state entries'
-        # 25k (measured at sf0.1/100k rows: "bucketed" 3.2 s at 32
-        # parts vs 11.2 s at 4; "event_time_bucketed" — which re-reads
-        # every partition's event-time buffer on EACH trigger — is best
-        # at ~8 parts: 16.3 s vs 18.4 s at 32 and 20.8 s at 4).
-        per_backend = (
+        # Python state scales with ROWS of per-partition Python work,
+        # not just per-partition state-store overhead, so the partition
+        # target is much smaller than the JVM-state entries' 25k
+        # (measured at sf0.1/100k rows: arrival order 3.2 s at 32 parts
+        # vs 11.2 s at 4; event time — which re-reads every
+        # partition's event-time buffer on EACH trigger — is best at ~8
+        # parts: 16.3 s vs 18.4 s at 32 and 20.8 s at 4).
+        per_order = (
             {"target_rows": 12_500, "floor": 8}
-            if backend.startswith("event_time")
+            if event_time
             else {"target_rows": 3_000, "floor": 8}
         )
-        with _stream_parts(spark, ev.count(), **per_backend):
+        with _stream_parts(spark, ev.count(), **per_order):
             stream = read_file_stream(
                 spark, f"{tmp}/ev", ev.schema, time_col="ts",
                 watermark=watermark,
-                max_files_per_trigger=1 if watermark is not None else None,
+                max_files_per_trigger=1 if event_time else None,
             )
             alerts = compile_rules_streaming(
                 stream, DEFAULT_RULES, key_field="user_id", time_col="ts",
-                order_cols=("event_id",), backend=backend,
+                order_cols=("event_id",), event_time=event_time,
             )
             q = (
                 alerts.writeStream.format("parquet")
@@ -5795,9 +5796,9 @@ def _streaming_detect(spark, sf, *, backend: str, watermark: str | None):
 @query("x84_streaming_detect_parity", _DETECT_ORACLE)
 def x84(spark, sf):
     """detect_pipeline's streaming twin, run INSIDE the correctness
-    gate: events → file stream → compile_rules_streaming on the
-    key-packing backend (stateful_alerts_bucketed — the 100 TB
-    cardinality path, 8.15× the per-key backend at 295 k keys) →
+    gate: events → file stream → compile_rules_streaming in arrival
+    order (the key-packed stateful_alerts — 8.15× a per-key group at
+    295 k keys, STRESS_r05_streaming.json) →
     availableNow drain → parquet sink (NOT a memory sink — see
     _streaming_detect's sink-choice rationale: memory sinks pin every
     alert row in the driver for the session's lifetime, which round 6
@@ -5812,7 +5813,7 @@ def x84(spark, sf):
     Reference anchor: StreamSentinelJob.java:102-140 (buildPipeline),
     executed rather than re-expressed: this entry runs the actual
     streaming operators, not a batch translation of them."""
-    return _streaming_detect(spark, sf, backend="bucketed", watermark=None)
+    return _streaming_detect(spark, sf, watermark=None)
 
 
 # ---------------------------------------------------------------------------
@@ -5983,7 +5984,7 @@ def x85(spark, sf):
 @query("x86_streaming_event_time_parity", _DETECT_ORACLE)
 def x86(spark, sf):
     """The EVENT-TIME ordered streaming mode inside the gate: same
-    3-rule pipeline, backend="event_time_bucketed" (per-bucket reorder
+    3-rule pipeline, event_time=True (per-bucket reorder
     buffers flushed in (ts, event_id) order as the watermark passes —
     alerts invariant to delivery order up to the bound, the mode whose
     batch parity test_streaming_event_time pins on shuffled cross-batch
@@ -5997,9 +5998,7 @@ def x86(spark, sf):
     corpus entries rather than test-only paths."""
     from stream_sentinel_spark.streaming.sources import DEFAULT_WATERMARK
 
-    return _streaming_detect(
-        spark, sf, backend="event_time_bucketed", watermark=DEFAULT_WATERMARK
-    )
+    return _streaming_detect(spark, sf, watermark=DEFAULT_WATERMARK)
 
 
 @query(

@@ -2,10 +2,12 @@
 Streaming (StreamSentinelJob.java:102-140, SURVEY §3.1).
 
 Shape: source (S1/S2/S3) → [stateless rule branches as native filters +
-ONE keyed stateful branch for all rate/statistical rules] → unionByName
-→ sink (S5). Stateless rules never enter Python: a threshold rule is a
-codegen'd filter even in streaming. The stateful branch is the single
-shuffle, on the same key the reference's keyBy uses.
+ONE key-packed stateful branch for all rate/statistical/cusum rules] →
+unionByName → sink (S5). Stateless rules never enter Python: a threshold
+rule is a codegen'd filter even in streaming. The stateful branch is the
+single shuffle, on a hash bucket of the key the reference's keyBy uses;
+it evaluates in arrival order (reference parity) or, opt-in, in event
+time.
 
 Checkpointing (T4): every writer takes ``checkpoint_location``;
 Structured Streaming's offset/state checkpointing gives exactly-once
@@ -26,10 +28,14 @@ from pyspark.sql.streaming import StreamingQuery
 
 from stream_sentinel_spark.config import EngineConfig
 from stream_sentinel_spark.functions.alerts import serialize_alerts
+from stream_sentinel_spark.metrics import observe_stream_events
 from stream_sentinel_spark.plans.pipeline import compile_rule
 from stream_sentinel_spark.rules import DetectionRule
 from stream_sentinel_spark.streaming.sources import INGEST_COL
-from stream_sentinel_spark.streaming.state import stateful_alerts
+from stream_sentinel_spark.streaming.state import (
+    stateful_alerts,
+    stateful_alerts_event_time,
+)
 
 STATEFUL_TYPES = ("rate", "statistical", "cusum")
 
@@ -42,41 +48,29 @@ def compile_rules_streaming(
     time_col: str = "ts",
     order_cols: Sequence[str] = (),
     state_ttl_ms: int | None = None,
-    backend: str = "aiws",
+    event_time: bool = False,
     n_state_buckets: int = 4096,
 ) -> DataFrame:
     """Compile a rule set against a STREAMING events frame.
 
     Stateless rules compile through the shared batch compiler (identical
     plans work on streaming frames); stateful rules are gathered into
-    one keyed stateful branch. Empty rule set is fatal, as at job
-    start (StreamSentinelJob.java:70-75).
+    one key-packed stateful branch, grouped on ``xxhash64(key) mod
+    n_state_buckets`` (see :func:`stateful_alerts`). Empty rule set is
+    fatal, as at job start (StreamSentinelJob.java:70-75).
 
-    ``backend`` picks the stateful API: ``"aiws"`` (default) is
-    `applyInPandasWithState`; ``"tws"`` is `transformWithStateInPandas`
-    (Spark 4 typed-state API, built-in TTL, requires the protobuf
-    package — see :func:`stateful_alerts_tws`); ``"bucketed"`` is the
-    key-packing backend for EXTREME key cardinality — one state blob
-    per ``xxhash64(key) mod n_state_buckets`` bucket, amortizing the
-    per-key framework round trip that dominates past ~100k distinct
-    keys (see :func:`stateful_alerts_bucketed`; ``n_state_buckets`` is
-    ignored by the arrival-order per-key backends). ``"event_time"``
-    and ``"event_time_bucketed"`` run the EVENT-TIME ordered mode
-    (:func:`stateful_alerts_event_time` — alerts invariant to delivery
-    order up to the watermark; ``events`` MUST carry ``withWatermark``;
-    ``state_ttl_ms`` there means EVENT-TIME idleness — deterministic
-    and replay-stable — and expired rate windows are pruned
-    automatically even without it). The arrival-order backends produce
-    identical alerts to each other (tests/test_streaming_tws.py,
-    tests/test_streaming_bucketed.py) and the event-time backends match
-    the batch plans (tests/test_streaming_event_time.py); any runs on
-    the RocksDB state store via
-    ``spark.sql.streaming.stateStore.providerClass`` — the store that
-    survives 100 TB key cardinality."""
-    if backend not in (
-        "aiws", "tws", "bucketed", "event_time", "event_time_bucketed"
-    ):
-        raise ValueError(f"unknown stateful backend: {backend!r}")
+    ``event_time`` picks the branch's ordering. ``False`` (default) is
+    ARRIVAL order, the reference's semantics. ``True`` is EVENT-TIME
+    order (:func:`stateful_alerts_event_time` — alerts invariant to
+    delivery order up to the watermark; ``events`` MUST carry
+    ``withWatermark``; ``state_ttl_ms`` there means EVENT-TIME
+    idleness — deterministic and replay-stable — and expired rate
+    windows are pruned automatically even without it). Arrival order
+    matches the batch plans on in-order input
+    (tests/test_streaming_parity.py), event time on any delivery order
+    within the watermark (tests/test_streaming_event_time.py). Either
+    runs on the RocksDB state store via
+    ``spark.sql.streaming.stateStore.providerClass``."""
     if not rules:
         raise ValueError(
             "No detection rules configured — refusing to start (empty rule set)"
@@ -84,7 +78,7 @@ def compile_rules_streaming(
     # ingestion-time column is plumbing, not event payload: keep it out of
     # alert original_event so batch and streaming alerts are identical
     payload_cols = [c for c in events.columns if c != INGEST_COL]
-    payload = events.select(*payload_cols)
+    payload = observe_stream_events(events.select(*payload_cols))
 
     branches: list[DataFrame] = []
     stateful: list[tuple[int, DetectionRule]] = []
@@ -100,32 +94,7 @@ def compile_rules_streaming(
                 )
             )
     if stateful:
-        extra: dict = {}
-        if backend == "tws":
-            from stream_sentinel_spark.streaming.state import stateful_alerts_tws
-
-            stateful_fn = stateful_alerts_tws
-            extra["state_ttl_ms"] = state_ttl_ms
-        elif backend == "bucketed":
-            from stream_sentinel_spark.streaming.state import (
-                stateful_alerts_bucketed,
-            )
-
-            stateful_fn = stateful_alerts_bucketed
-            extra["n_buckets"] = n_state_buckets
-            extra["state_ttl_ms"] = state_ttl_ms
-        elif backend.startswith("event_time"):
-            from stream_sentinel_spark.streaming.state import (
-                stateful_alerts_event_time,
-            )
-
-            stateful_fn = stateful_alerts_event_time
-            extra["state_ttl_ms"] = state_ttl_ms
-            if backend == "event_time_bucketed":
-                extra["n_buckets"] = n_state_buckets
-        else:
-            stateful_fn = stateful_alerts
-            extra["state_ttl_ms"] = state_ttl_ms
+        stateful_fn = stateful_alerts_event_time if event_time else stateful_alerts
         branches.append(
             stateful_fn(
                 payload,
@@ -134,7 +103,8 @@ def compile_rules_streaming(
                 time_col=time_col,
                 order_cols=order_cols,
                 rule_indexes=[i for i, _ in stateful],
-                **extra,
+                state_ttl_ms=state_ttl_ms,
+                n_buckets=n_state_buckets,
             )
         )
     return reduce(lambda a, b: a.unionByName(b), branches)

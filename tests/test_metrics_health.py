@@ -83,6 +83,108 @@ def test_streaming_listener_counts(spark, tmp_path):
         spark.streams.removeListener(listener)
 
 
+class _FakeSource:
+    def __init__(self, description, rows):
+        self.description = description
+        self.numInputRows = rows
+
+
+class _FakeProgress:
+    def __init__(self, sources, observed=None):
+        self.sources = sources
+        self.observedMetrics = observed
+        self.sink = None
+        self.durationMs = {}
+
+
+def _events_of(progress) -> int:
+    listener = SentinelMetricsListener()
+    listener.onQueryProgress(type("E", (), {"progress": progress})())
+    return listener.events_processed
+
+
+def test_listener_counts_each_source_once():
+    """Two sources with the same description count once; two different
+    sources still sum."""
+    same = [_FakeSource("FileStreamSource[a]", 7), _FakeSource("FileStreamSource[a]", 7)]
+    assert _events_of(_FakeProgress(same)) == 7
+    both = [_FakeSource("FileStreamSource[a]", 7), _FakeSource("FileStreamSource[b]", 5)]
+    assert _events_of(_FakeProgress(both)) == 12
+
+
+def test_listener_prefers_the_observed_event_count():
+    """Spark sums every scan of a source into its numInputRows, so a
+    source feeding two branches reports twice its rows; the detector's
+    observed count is the one the listener takes."""
+    from pyspark.sql import Row
+
+    from stream_sentinel_spark.metrics import STREAM_EVENTS_OBSERVATION
+
+    observed = {
+        f"{STREAM_EVENTS_OBSERVATION}_0": Row(**{EVENTS_PROCESSED: 7}),
+        "user_metric": Row(n=99),
+    }
+    progress = _FakeProgress([_FakeSource("FileStreamSource[a]", 14)], observed)
+    assert _events_of(progress) == 7
+
+
+def _drain_counting(spark, alerts, ckpt: str, expected: int) -> tuple[int, int]:
+    """Run ``alerts`` to completion under a fresh listener; returns
+    (Spark's summed numInputRows, the listener's events_processed)."""
+    import time
+
+    listener = SentinelMetricsListener()
+    spark.streams.addListener(listener)
+    try:
+        q = (
+            alerts.writeStream.format("noop")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        for _ in range(40):
+            if listener.events_processed >= expected:
+                break
+            time.sleep(0.25)
+        time.sleep(0.5)  # a late double count would land here
+        return sum(p.numInputRows for p in q.recentProgress), listener.events_processed
+    finally:
+        spark.streams.removeListener(listener)
+
+
+def test_streaming_listener_counts_events_once_across_branches(spark, tmp_path):
+    """DEFAULT_RULES compile to a stateless and a stateful branch, both
+    scanning the one file source; the listener still counts each event
+    once. Two stateless detectors over two sources unioned in one query
+    (a query holds at most one stateful detector) count each source's
+    events once, without their event counts colliding."""
+    from stream_sentinel_spark.plans.corpus import DEFAULT_RULES
+
+    ev = load_table(spark, SF_DIR, "events")
+    n = ev.count()
+    srcs = [str(tmp_path / "ev_a"), str(tmp_path / "ev_b")]
+    for src in srcs:
+        ev.write.parquet(src)
+
+    def detector(src, rules):
+        stream = read_file_stream(spark, src, ev.schema, time_col="ts", watermark=None)
+        return compile_rules_streaming(
+            stream, rules, key_field="user_id", time_col="ts",
+            order_cols=("event_id",),
+        )
+
+    scanned, counted = _drain_counting(
+        spark, detector(srcs[0], DEFAULT_RULES), str(tmp_path / "ckpt1"), n
+    )
+    assert scanned == 2 * n and counted == n
+    both = detector(srcs[0], [THRESHOLD_RULE]).unionByName(
+        detector(srcs[1], [THRESHOLD_RULE])
+    )
+    scanned, counted = _drain_counting(spark, both, str(tmp_path / "ckpt2"), 2 * n)
+    assert scanned == 2 * n and counted == 2 * n
+
+
 def test_health_port_validation():
     srv = HealthServer()
     with pytest.raises(ValueError, match=r"\[1, 65535\]"):

@@ -1,16 +1,23 @@
-"""Key-packing stateful backend ≡ per-key backend.
+"""The key-packed stateful detector ≡ the batch plan.
 
-stateful_alerts_bucketed groups by a hash bucket of the key and packs
-many per-key detector states into one blob; the detection loop per key
-slice is the SAME function the per-key backends run (_eval_sorted), so
-this module pins what the sharing cannot: the bucket sort (key-primary,
-then ts, then tie-breaks), the blob round trip, the in-blob TTL
-eviction, and the backend switch plumbing."""
+stateful_alerts groups by a hash bucket of the key and packs many
+per-key detector states into one blob; the detection loop per key slice
+is the shared _eval_sorted, so this module pins what the sharing
+cannot: the bucket sort (key-primary, then ts, then tie-breaks), the
+blob round trip across micro-batches, the in-blob TTL eviction, the
+compiler's bucket-count plumbing and the plan shape. The reference is
+the batch compile_rules plan over the same rows, fed in event-time
+order so that arrival order and the batch order agree."""
 
 from __future__ import annotations
 
-import pytest
+import os
+import time
 
+import pytest
+from pyspark.sql import functions as F
+
+from stream_sentinel_spark.plans.pipeline import compile_rules
 from stream_sentinel_spark.rules import DetectionRule
 from stream_sentinel_spark.sources.batch import load_table
 from stream_sentinel_spark.streaming import (
@@ -18,12 +25,13 @@ from stream_sentinel_spark.streaming import (
     read_file_stream,
     run_available_now,
 )
-from stream_sentinel_spark.streaming.state import (
-    stateful_alerts,
-    stateful_alerts_bucketed,
-)
+from stream_sentinel_spark.streaming.state import stateful_alerts
 
 SF_DIR = "/root/testdata/sf0.001"
+
+ROCKSDB = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 
 RULES = [
     DetectionRule(
@@ -52,75 +60,115 @@ def events_src(spark, tmp_path_factory):
     return path, ev
 
 
-def _run(spark, events_src, backend_fn, tag, **kw):
+@pytest.fixture(scope="module")
+def batch_alerts(events_src):
+    _, ev = events_src
+    rows = compile_rules(
+        ev, RULES, key_field="user_id", time_col="ts", order_cols=("event_id",)
+    ).collect()
+    assert len(rows) > 0, "fixture rules must fire on the test data"
+    return rows
+
+
+def _run(spark, events_src, tag, **kw):
     path, ev = events_src
     stream = read_file_stream(spark, path, ev.schema, time_col="ts", watermark=None)
-    alerts = backend_fn(
+    alerts = stateful_alerts(
         stream, RULES, key_field="user_id", time_col="ts",
         order_cols=("event_id",), **kw,
     )
     return run_available_now(alerts, query_name=f"bkt_{tag}")
 
 
-def test_bucketed_matches_per_key(spark, events_src):
-    base = _run(spark, events_src, stateful_alerts, "base")
-    assert len(base) > 0, "fixture rules must fire on the test data"
-    bkt = _run(spark, events_src, stateful_alerts_bucketed, "packed")
-    assert sorted(map(_alert_key, base)) == sorted(map(_alert_key, bkt))
+def test_bucketed_matches_batch_plan(spark, events_src, batch_alerts):
+    """One micro-batch holding every event is evaluated in (ts,
+    event_id) order per key — the batch plan's order — so the alert
+    sets must be identical, original_event included."""
+    bkt = _run(spark, events_src, "packed")
+    assert sorted(map(_alert_key, batch_alerts)) == sorted(map(_alert_key, bkt))
     # original_event survives the packed-blob round trip (ingest_ts is
-    # a wall-clock stamp that differs between any two runs — drop it)
+    # a wall-clock stamp only the stream carries — drop it)
     def payload(r):
         return {k: v for k, v in r["original_event"].items() if k != "ingest_ts"}
 
-    b = {_alert_key(r): payload(r) for r in base}
+    b = {_alert_key(r): payload(r) for r in batch_alerts}
     p = {_alert_key(r): payload(r) for r in bkt}
     k = next(iter(b))
     assert b[k] == p[k] and len(b[k]) > 3
 
 
-def test_bucketed_packs_keys(spark, events_src):
+def test_bucketed_packs_keys(spark, events_src, batch_alerts):
     """With n_buckets=1 every key lands in ONE blob and the results must
     still match — the degenerate case that proves the per-key slicing
     inside the bucket, not the hash spread, carries the semantics."""
-    base = _run(spark, events_src, stateful_alerts, "base1")
-    one = _run(spark, events_src, stateful_alerts_bucketed, "one", n_buckets=1)
-    assert sorted(map(_alert_key, base)) == sorted(map(_alert_key, one))
+    one = _run(spark, events_src, "one", n_buckets=1)
+    assert sorted(map(_alert_key, batch_alerts)) == sorted(map(_alert_key, one))
 
 
-def test_bucketed_state_survives_batches(spark, events_src, tmp_path):
+def _write_time_ordered_files(ev, path: str, n_files: int) -> None:
+    """``ev`` as ``n_files`` parquet files over consecutive ts ranges
+    (equal timestamps never straddle two files), with strictly
+    increasing mtimes: maxFilesPerTrigger=1 picks files by mtime, so
+    the stream delivers them in event-time order, one per trigger."""
+    stamps = sorted(r[0] for r in ev.select("ts").distinct().collect())
+    cuts = [stamps[len(stamps) * i // n_files] for i in range(1, n_files)]
+    edges = [None, *cuts, None]
+    base = time.time()
+    for i in range(n_files):
+        part = ev
+        if edges[i] is not None:
+            part = part.filter(F.col("ts") >= edges[i])
+        if edges[i + 1] is not None:
+            part = part.filter(F.col("ts") < edges[i + 1])
+        before = set(os.listdir(path)) if os.path.exists(path) else set()
+        part.coalesce(1).write.mode("append").parquet(path)
+        for f in set(os.listdir(path)) - before:
+            os.utime(os.path.join(path, f), (base, base + 2.0 * i))
+
+
+def test_bucketed_state_survives_batches(spark, events_src, batch_alerts, tmp_path):
     """Detector windows must accumulate ACROSS micro-batches through the
-    packed blob: stream the same events one file per trigger and compare
-    against the single-batch run (same construction as the cross-batch
-    guarantees in test_streaming_parity)."""
-    path, ev = events_src
+    packed blob: stream the events one time-range file per trigger (two
+    buckets, so each blob carries several keys between triggers) and
+    compare against the batch plan, which sees every event at once."""
+    _, ev = events_src
     multi = str(tmp_path / "multi")
-    ev.repartition(4).write.mode("overwrite").parquet(multi)
+    _write_time_ordered_files(ev, multi, n_files=4)
     stream = read_file_stream(
         spark, multi, ev.schema, time_col="ts", watermark=None,
         max_files_per_trigger=1,
     )
-    alerts = stateful_alerts_bucketed(
+    alerts = stateful_alerts(
         stream, RULES, key_field="user_id", time_col="ts",
-        order_cols=("event_id",),
+        order_cols=("event_id",), n_buckets=2,
     )
-    got = run_available_now(alerts, query_name="bkt_multi")
-    base = _run(spark, events_src, stateful_alerts, "base2")
-    # cross-batch arrival order differs from the single-batch sort, so
-    # compare the rate alerts by count per key and the statistical set
-    # exactly where order is deterministic — mirror: the per-key backend
-    # on the SAME multi-file stream is the true twin
-    stream2 = read_file_stream(
-        spark, multi, ev.schema, time_col="ts", watermark=None,
-        max_files_per_trigger=1,
+    q = (
+        alerts.writeStream.format("memory").queryName("bkt_multi")
+        .outputMode("append").trigger(availableNow=True).start()
     )
-    alerts2 = stateful_alerts(
-        stream2, RULES, key_field="user_id", time_col="ts",
-        order_cols=("event_id",),
-    )
-    want = run_available_now(alerts2, query_name="key_multi")
-    assert sorted(map(_alert_key, got)) == sorted(map(_alert_key, want))
-    assert len(got) > 0
-    assert len(base) > 0  # sanity: the fixture fires either way
+    q.awaitTermination()
+    data_batches = [p for p in q.recentProgress if p.numInputRows]
+    assert len(data_batches) == 4, "one file per trigger"
+    got = spark.table("bkt_multi").collect()
+    assert sorted(map(_alert_key, got)) == sorted(map(_alert_key, batch_alerts))
+
+
+def test_packed_on_rocksdb_matches_default_store(spark, events_src):
+    """The bench's measured streaming path: the packed detector on the
+    RocksDB state store provider must produce the identical alert set
+    to the default in-memory store."""
+    base = _run(spark, events_src, "mem")
+    assert len(base) > 0
+    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB)
+    try:
+        rocks = _run(spark, events_src, "rocks")
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        else:
+            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    assert sorted(map(_alert_key, base)) == sorted(map(_alert_key, rocks))
 
 
 def test_bucketed_ttl_evicts_idle_keys(spark, tmp_path):
@@ -159,7 +207,7 @@ def test_bucketed_ttl_evicts_idle_keys(spark, tmp_path):
             spark, src, schema, time_col="ts", watermark=None,
             max_files_per_trigger=1,
         )
-        alerts = stateful_alerts_bucketed(
+        alerts = stateful_alerts(
             stream, rules, key_field="user_id", time_col="ts",
             order_cols=("event_id",), state_ttl_ms=ttl_ms, n_buckets=4,
         )
@@ -211,12 +259,12 @@ def test_ttl_never_evicts_a_key_with_data_in_the_batch():
     previous batch — so the in-blob eviction must prune AFTER stamping
     the batch's keys. Driven at the processor level with an ancient
     last-seen stamp: the key's rate window must ACCUMULATE across the
-    gap (per-key-backend behavior), not restart."""
+    gap, not restart."""
     import json as _json
 
     import pandas as pd
 
-    from stream_sentinel_spark.streaming.state import _make_bucketed_processor
+    from stream_sentinel_spark.streaming.state import _make_arrival_processor
 
     spec = {
         "rule_index": 0, "name": "burst", "type": "rate", "field": "value",
@@ -256,7 +304,7 @@ def test_ttl_never_evicts_a_key_with_data_in_the_batch():
             }
         )
 
-    proc = _make_bucketed_processor([spec], {}, ("event_id",), ttl_ms=500)
+    proc = _make_arrival_processor([spec], {}, ("event_id",), ttl_ms=500)
     # hand-crafted prior state: k1's rate window already holds 2
     # timestamps, last seen at wall epoch 0 — i.e. ages ago vs ttl=500ms
     blob_in = _json.dumps(
@@ -282,13 +330,37 @@ def test_ttl_never_evicts_a_key_with_data_in_the_batch():
     assert "idle" not in kept["s"] and "k1" in kept["s"]
 
 
-def test_compile_rules_streaming_bucketed_switch(spark, events_src):
+def test_compile_rules_streaming_n_state_buckets(spark, events_src, batch_alerts):
+    """The compiler's ``n_state_buckets`` reaches the packed branch:
+    64 buckets, the same alert set as the batch plan."""
     path, ev = events_src
     stream = read_file_stream(spark, path, ev.schema, time_col="ts", watermark=None)
     alerts = compile_rules_streaming(
         stream, RULES, key_field="user_id", time_col="ts",
-        order_cols=("event_id",), backend="bucketed", n_state_buckets=64,
+        order_cols=("event_id",), n_state_buckets=64,
     )
+    plan = alerts._jdf.queryExecution().analyzed().toString()
+    assert "pmod(xxhash64(__ss_key#" in plan
+    assert "cast(64 as bigint)) AS __ss_bkt#" in plan
     got = run_available_now(alerts, query_name="bkt_compiled")
-    want = _run(spark, events_src, stateful_alerts, "base3")
-    assert sorted(map(_alert_key, got)) == sorted(map(_alert_key, want))
+    assert sorted(map(_alert_key, got)) == sorted(map(_alert_key, batch_alerts))
+
+
+def test_default_plan_is_one_packed_processor(spark, events_src):
+    """The default compiled detector holds exactly one stateful
+    operator, an applyInPandasWithState grouped on the key's hash
+    bucket, and no transformWithState operator."""
+    path, ev = events_src
+    stream = read_file_stream(spark, path, ev.schema, time_col="ts", watermark=None)
+    rules = [
+        *RULES,
+        DetectionRule(name="thr", type="threshold", field="amount", threshold=1.0),
+    ]
+    alerts = compile_rules_streaming(
+        stream, rules, key_field="user_id", time_col="ts", order_cols=("event_id",)
+    )
+    plan = alerts._jdf.queryExecution().analyzed().toString()
+    stateful = [ln for ln in plan.split("\n") if "FlatMapGroupsInPandasWithState" in ln]
+    assert len(stateful) == 1, plan
+    assert "[__ss_bkt#" in stateful[0], stateful[0]
+    assert "TransformWithStateInPandas" not in plan

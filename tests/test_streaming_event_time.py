@@ -5,7 +5,7 @@ batch plans (which are event-time ordered by construction).
 The fixture deliberately delivers events SHUFFLED within two time
 blocks across micro-batches (maxFilesPerTrigger=1) with sentinel
 events advancing the watermark between and after the blocks — the
-arrival-order backends would evaluate the shuffled windows and
+arrival-order detector would evaluate the shuffled windows and
 produce different rate/statistical alerts; the event-time mode must
 reproduce the batch alert set exactly."""
 
@@ -64,8 +64,8 @@ def _mk_events():
     def split3(rows_):
         # SHUFFLED rows split across three files: the disorder now spans
         # MICRO-BATCHES, not just within one (each batch is event-time
-        # sorted internally by _run_rules_over_batch, so single-file
-        # disorder is invisible to the arrival-order backend)
+        # sorted internally by _run_rules_over_bucket, so single-file
+        # disorder is invisible to the arrival-order detector)
         k = (len(rows_) + 2) // 3
         return [rows_[i : i + k] for i in range(0, len(rows_), k)]
     # sentinels: own key, NULL value (invisible to value rules; rate
@@ -160,11 +160,10 @@ def test_event_time_mode_matches_batch_despite_shuffled_arrival(
 def test_event_time_bucketed_matches_batch_and_per_key(
     spark, event_time_fixture
 ):
-    """The key-packed event-time mode (n_buckets) must reproduce the
-    batch alert set on the same shuffled cross-batch delivery — the
-    same invariant as the per-key mode, through one buffer blob per
-    bucket. n_buckets=2 forces multiple keys per bucket so the packed
-    path (key-primary sort + per-slice flush) is actually exercised."""
+    """With n_buckets=2 several keys share each buffer blob, so the
+    packed path (key-primary sort + per-slice flush) is exercised with
+    more than one key per bucket; the shuffled cross-batch delivery
+    must still reproduce the batch alert set."""
     path, full = event_time_fixture
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
@@ -210,7 +209,7 @@ def test_arrival_order_backend_differs_on_shuffled_input(
     spark, event_time_fixture
 ):
     """The contrast that makes the mode matter: the reference-parity
-    arrival-order backend evaluates the SAME shuffled delivery in
+    arrival-order detector evaluates the SAME shuffled delivery in
     arrival order and produces a DIFFERENT alert set (deterministically,
     fixed shuffle seed) — event-time ordering is a real semantic
     upgrade, not a formality."""
@@ -249,13 +248,14 @@ def test_arrival_order_backend_differs_on_shuffled_input(
     assert streamed != batch
 
 
-# slow tier: combined both-backends compiler sweep; each backend's batch parity runs at default size in test_event_time_mode_matches_batch_despite_shuffled_arrival and test_event_time_bucketed_matches_batch_and_per_key
+# slow tier: compiler sweep over two bucket counts; the processor's batch parity runs at default size in test_event_time_mode_matches_batch_despite_shuffled_arrival and test_event_time_bucketed_matches_batch_and_per_key
 @pytest.mark.slow
 def test_compile_rules_streaming_event_time_backends(spark, event_time_fixture):
-    """The pipeline compiler reaches both event-time backends: the
-    compiled stream (stateless branches native + event-time stateful
-    branch) must reproduce the batch alert set on the shuffled fixture,
-    and TTL is rejected up front (the watermark bounds state here)."""
+    """The pipeline compiler reaches the event-time mode: the compiled
+    stream (stateless branches native + event-time stateful branch)
+    must reproduce the batch alert set on the shuffled fixture, at the
+    default bucket count and at two buckets, and with a TTL far beyond
+    every rule window."""
     from stream_sentinel_spark.streaming import compile_rules_streaming
 
     path, full = event_time_fixture
@@ -272,14 +272,14 @@ def test_compile_rules_streaming_event_time_backends(spark, event_time_fixture):
         if r["key"] != str(SENTINEL_USER)
     ]
     assert any(r["rule_name"] == "hot" for r in batch)
-    for backend, tag in (("event_time", "cet"), ("event_time_bucketed", "cetb")):
+    for n_buckets, tag in ((4096, "cet"), (2, "cetb")):
         stream = read_file_stream(
             spark, path, full.schema, time_col="ts", watermark=DELAY,
             max_files_per_trigger=1,
         )
         alerts = compile_rules_streaming(
             stream, rules, key_field="user_id", time_col="ts",
-            order_cols=("event_id",), backend=backend, n_state_buckets=2,
+            order_cols=("event_id",), event_time=True, n_state_buckets=n_buckets,
         )
         q = (
             alerts.writeStream.format("memory").queryName(f"evt_{tag}")
@@ -291,7 +291,7 @@ def test_compile_rules_streaming_event_time_backends(spark, event_time_fixture):
             for r in spark.table(f"evt_{tag}").collect()
             if r["key"] != str(SENTINEL_USER)
         ]
-        assert sorted(map(_key, streamed)) == sorted(map(_key, batch)), backend
+        assert sorted(map(_key, streamed)) == sorted(map(_key, batch)), n_buckets
 
     # a TTL far beyond every rule window must not change the alert set
     # (event-time idleness eviction only touches keys whose windows are
@@ -302,7 +302,7 @@ def test_compile_rules_streaming_event_time_backends(spark, event_time_fixture):
     )
     alerts = compile_rules_streaming(
         stream, rules, key_field="user_id", time_col="ts",
-        order_cols=("event_id",), backend="event_time",
+        order_cols=("event_id",), event_time=True,
         state_ttl_ms=86_400_000 * 365,
     )
     q = (
@@ -331,10 +331,15 @@ def test_processor_tolerates_pre_encoding_state_blob():
         "threshold": 0.0, "window_seconds": 60, "window_size": 0,
         "deviation_factor": 0.0, "decimal_scale": None, "target": 0.0,
     }
-    process = S._make_event_time_processor([spec], {}, ())
+    process = S._make_event_time_flush_processor([spec], {}, ())
 
-    old_row = {S._TSUS: 1_000_000, S._EVMAP: {"user_id": "u1", "value": "9.0"}}
-    new_row = {S._TSUS: 2_000_000, S._EVMAP: json.dumps({"user_id": "u1"})}
+    old_row = {
+        S._KEY: "u1", S._TSUS: 1_000_000,
+        S._EVMAP: {"user_id": "u1", "value": "9.0"},
+    }
+    new_row = {
+        S._KEY: "u1", S._TSUS: 2_000_000, S._EVMAP: json.dumps({"user_id": "u1"}),
+    }
     blob = json.dumps({"det": {}, "buf": [old_row, new_row]})
 
     class FakeState:
@@ -359,7 +364,7 @@ def test_processor_tolerates_pre_encoding_state_blob():
             pass
 
     st = FakeState()
-    out = list(process(("u1",), iter([]), st))
+    out = list(process((0,), iter([]), st))
     assert len(out) == 1 and len(out[0]) == 2, "both formats flushed"
     assert all(isinstance(ev, dict) for ev in out[0]["original_event"])
     assert {ev.get("user_id") for ev in out[0]["original_event"]} == {"u1"}
@@ -411,17 +416,17 @@ def _stat_spec():
     }
 
 
-def _pdf(ids, key=None):
+def _pdf(ids, key="k"):
     import pandas as pd
 
-    cols = {
-        "__ss_ts_us": [1_000_000 * i for i in ids],
-        "__ss_event": [{"n": str(i)} for i in ids],
-        "event_id": [f"e{i}" for i in ids],
-    }
-    if key is not None:
-        cols = {"__ss_key": [key] * len(ids), **cols}
-    return pd.DataFrame(cols)
+    return pd.DataFrame(
+        {
+            "__ss_key": [key] * len(ids),
+            "__ss_ts_us": [1_000_000 * i for i in ids],
+            "__ss_event": [{"n": str(i)} for i in ids],
+            "event_id": [f"e{i}" for i in ids],
+        }
+    )
 
 
 def test_rate_only_state_evicts_once_windows_expire():
@@ -434,25 +439,27 @@ def test_rate_only_state_evicts_once_windows_expire():
     import json as _json
 
     from stream_sentinel_spark.streaming.state import (
-        _make_event_time_processor,
+        _make_event_time_flush_processor,
     )
 
-    proc = _make_event_time_processor([_rate_spec(win_s=60)], {}, ("event_id",))
+    proc = _make_event_time_flush_processor(
+        [_rate_spec(win_s=60)], {}, ("event_id",)
+    )
     st = _EvtFakeState()
     st.wm = 10_000  # both events (ts 1s, 2s) are ready
-    list(proc(("k",), iter([_pdf([1, 2])]), st))
+    list(proc((0,), iter([_pdf([1, 2])]), st))
     blob = _json.loads(st._blob)
-    assert blob["det"]["r0"] == [1_000, 2_000]
+    assert blob["det"]["k"]["r0"] == [1_000, 2_000]
     assert st.armed_at == 2_000 + 60_000, "armed at the expiry point"
     # watermark just short of expiry (boundary is STRICT): nothing dies
     st.hasTimedOut = True
     st.wm = 62_000
-    list(proc(("k",), iter([]), st))
-    assert not st.removed and _json.loads(st._blob)["det"]["r0"] == [2_000]
+    list(proc((0,), iter([]), st))
+    assert not st.removed and _json.loads(st._blob)["det"]["k"]["r0"] == [2_000]
     # watermark past the last entry's expiry: the whole blob goes
     st.hasTimedOut = True
     st.wm = 62_001
-    list(proc(("k",), iter([]), st))
+    list(proc((0,), iter([]), st))
     assert st.removed
 
 
@@ -463,30 +470,28 @@ def test_event_time_ttl_evicts_idle_statistical_state():
     import json as _json
 
     from stream_sentinel_spark.streaming.state import (
-        _make_event_time_processor,
+        _make_event_time_flush_processor,
     )
 
-    proc = _make_event_time_processor(
+    proc = _make_event_time_flush_processor(
         [_stat_spec()], {1: "__ss_v1"}, ("event_id",), ttl_ms=5_000
     )
-    import pandas as pd
-
     pdf = _pdf([1, 2])
     pdf["__ss_v1"] = [1.0, 2.0]
     st = _EvtFakeState()
     st.wm = 3_000  # events ready, but NOT yet idle (last+ttl=7000 > wm)
-    list(proc(("k",), iter([pdf]), st))
+    list(proc((0,), iter([pdf]), st))
     blob = _json.loads(st._blob)
     # statistical history is stored as scaled ints (decimal_scale=2)
-    assert blob["det"]["r1"] == [100, 200] and blob["last"] == 2_000
+    assert blob["det"]["k"]["r1"] == [100, 200] and blob["last"] == {"k": 2_000}
     assert st.armed_at == 2_000 + 5_000
     st.hasTimedOut = True
     st.wm = 7_000  # last + ttl == 7000: strict boundary — retained
-    list(proc(("k",), iter([]), st))
+    list(proc((0,), iter([]), st))
     assert not st.removed
     st.hasTimedOut = True
     st.wm = 7_001
-    list(proc(("k",), iter([]), st))
+    list(proc((0,), iter([]), st))
     assert st.removed
 
 
@@ -498,10 +503,10 @@ def test_bucketed_event_time_ttl_evicts_only_idle_keys():
     import pandas as pd
 
     from stream_sentinel_spark.streaming.state import (
-        _make_event_time_bucketed_processor,
+        _make_event_time_flush_processor,
     )
 
-    proc = _make_event_time_bucketed_processor(
+    proc = _make_event_time_flush_processor(
         [_stat_spec()], {1: "__ss_v1"}, ("event_id",), ttl_ms=5_000
     )
     old = _pdf([1], key="idle")
@@ -522,7 +527,7 @@ def test_bucketed_event_time_ttl_evicts_only_idle_keys():
 def test_columnar_buffer_partial_flush_and_legacy_upgrade():
     """The state blob's pending buffer is COLUMNAR (round 10: one list
     per column instead of one dict per row — the whole-buffer json
-    round-trip per trigger was the backend's dominant cost). A partial
+    round-trip per trigger was the mode's dominant cost). A partial
     flush must keep exactly the not-yet-ready rows, persist them
     columnar, and flush them on the next watermark advance; a legacy
     row-dict blob must upgrade in place to the columnar layout."""
@@ -530,21 +535,24 @@ def test_columnar_buffer_partial_flush_and_legacy_upgrade():
 
     from stream_sentinel_spark.streaming import state as S
 
-    proc = S._make_event_time_processor([_rate_spec(win_s=60)], {}, ("event_id",))
+    proc = S._make_event_time_flush_processor(
+        [_rate_spec(win_s=60)], {}, ("event_id",)
+    )
     st = _EvtFakeState()
     st.wm = 1_500  # ts 1s ready, ts 2s pending
-    out = list(proc(("k",), iter([_pdf([1, 2])]), st))
+    out = list(proc((0,), iter([_pdf([1, 2])]), st))
     blob = _json.loads(st._blob)
     assert isinstance(blob["buf"], dict), "pending buffer persists columnar"
     assert blob["buf"][S._TSUS] == [2_000_000]
     assert blob["buf"]["event_id"] == ["e2"]
-    assert blob["det"]["r0"] == [1_000], "only the ready row evaluated"
+    assert blob["buf"][S._KEY] == ["k"]
+    assert blob["det"]["k"]["r0"] == [1_000], "only the ready row evaluated"
     assert st.armed_at == st.wm + 1, "re-armed while rows pend"
     # second advance flushes the pending row identically
     st.hasTimedOut = True
     st.wm = 10_000
-    list(proc(("k",), iter([]), st))
-    assert _json.loads(st._blob)["det"]["r0"] == [1_000, 2_000]
+    list(proc((0,), iter([]), st))
+    assert _json.loads(st._blob)["det"]["k"]["r0"] == [1_000, 2_000]
 
     # legacy list-of-row-dicts blob upgrades in place and keeps pending
     legacy = _json.dumps(
@@ -552,11 +560,13 @@ def test_columnar_buffer_partial_flush_and_legacy_upgrade():
             "det": {},
             "buf": [
                 {
+                    S._KEY: "k",
                     S._TSUS: 1_000_000,
                     S._EVMAP: {"n": "1"},
                     "event_id": "e1",
                 },
                 {
+                    S._KEY: "k",
                     S._TSUS: 9_000_000,
                     S._EVMAP: _json.dumps({"n": "9"}),
                     "event_id": "e9",
@@ -566,8 +576,8 @@ def test_columnar_buffer_partial_flush_and_legacy_upgrade():
     )
     st2 = _EvtFakeState(blob=legacy)
     st2.wm = 1_500  # first legacy row ready, second pending
-    list(proc(("k",), iter([]), st2))
+    list(proc((0,), iter([]), st2))
     blob2 = _json.loads(st2._blob)
-    assert blob2["det"]["r0"] == [1_000]
+    assert blob2["det"]["k"]["r0"] == [1_000]
     assert isinstance(blob2["buf"], dict)
     assert blob2["buf"][S._TSUS] == [9_000_000]

@@ -1,18 +1,17 @@
-"""Scale-stress the EVENT-TIME ordered mode at extreme key cardinality
-(round 5): the reorder buffer makes the per-key framework round trip
-even more expensive than the arrival-order backend's (every churn key
-costs one buffered-write invocation AND one timeout-flush invocation),
-so this measures the per-key mode against the key-packed mode
-(stateful_alerts_event_time(n_buckets=...)) on the same churn-shaped
+"""Scale-stress the EVENT-TIME ordered mode at extreme key cardinality:
+the key-packed stateful_alerts_event_time on the same churn-shaped
 stream the arrival-order stress uses — 300k events / ~295k distinct
-keys — and asserts the two modes' alert sets are IDENTICAL.
+keys — with its alert set asserted IDENTICAL to the batch plan's over
+the same rows (the stream delivers in event-time order, so no row is
+late). The per-key mode this harness once ran beside it (11.14×
+slower, identical alerts) is recorded in STRESS_r05_eventtime.json.
 
 The stream's event times advance 1 s per event across 6 files
 (maxFilesPerTrigger=1), so with a 5 s watermark delay each batch's rows
 flush when the next batch's data advances the watermark; a final
 sentinel file (far-future ts, fires nothing) flushes the tail.
 
-Run:  python tools/eventtime_scale_stress.py [--out STRESS_r05_eventtime.json]
+Run:  python tools/eventtime_scale_stress.py [--out STRESS_eventtime.json]
 """
 
 from __future__ import annotations
@@ -47,7 +46,7 @@ def _add_sentinel(spark, src: str) -> None:
     ).coalesce(1).write.mode("append").parquet(src)
 
 
-def _run(spark, src, schema, n_buckets):
+def _run(spark, src, schema):
     import shutil
 
     from stream_sentinel_spark.plans.corpus import DEFAULT_RULES
@@ -57,7 +56,6 @@ def _run(spark, src, schema, n_buckets):
     cap = ProgressCapture()
     spark.streams.addListener(cap)
     ckpt = tempfile.mkdtemp(prefix="ss_evt_stress_ckpt_")
-    tag = "packed" if n_buckets else "perkey"
     try:
         stream = read_file_stream(
             spark, src, schema, time_col="ts", watermark=WATERMARK,
@@ -66,12 +64,12 @@ def _run(spark, src, schema, n_buckets):
         stateful = [r for r in DEFAULT_RULES if r.type != "threshold"]
         alerts = stateful_alerts_event_time(
             stream, stateful, key_field="user_id", time_col="ts",
-            order_cols=("event_id",), n_buckets=n_buckets,
+            order_cols=("event_id",), n_buckets=N_BUCKETS,
         )
         t0 = time.perf_counter()
         q = (
             alerts.writeStream.format("memory")
-            .queryName(f"evt_stress_{tag}")
+            .queryName("evt_stress")
             .outputMode("append")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -79,7 +77,7 @@ def _run(spark, src, schema, n_buckets):
         )
         q.awaitTermination()
         wall = time.perf_counter() - t0
-        rows = spark.table(f"evt_stress_{tag}").collect()
+        rows = spark.table("evt_stress").collect()
         data_ms = sum(
             p["batchDuration"] for p in cap.progress if p.get("numInputRows")
         )
@@ -106,6 +104,23 @@ def _run(spark, src, schema, n_buckets):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
+def _batch_alerts(spark, src: str) -> list:
+    """The batch plan's alerts over the same rows, sentinel excluded, in
+    the streaming leg's tuple form."""
+    from stream_sentinel_spark.plans.corpus import DEFAULT_RULES
+    from stream_sentinel_spark.plans.pipeline import compile_rules
+
+    events = spark.read.parquet(src).filter(F.col("user_id") != "sentinel_user")
+    stateful = [r for r in DEFAULT_RULES if r.type != "threshold"]
+    rows = compile_rules(
+        events, stateful, key_field="user_id", time_col="ts",
+        order_cols=("event_id",),
+    ).collect()
+    return sorted(
+        (r["rule_name"], r["key"], str(r["alert_ts"]), r["details"]) for r in rows
+    )
+
+
 def run(out_path: str) -> dict:
     from stream_sentinel_spark.testing import stress_session
 
@@ -122,8 +137,8 @@ def run(out_path: str) -> dict:
         _add_sentinel(spark, src)
         schema = spark.read.parquet(src).schema
 
-        packed = _run(spark, src, schema, n_buckets=N_BUCKETS)
-        perkey = _run(spark, src, schema, n_buckets=None)
+        packed = _run(spark, src, schema)
+        batch = _batch_alerts(spark, src)
 
         rec = {
             "n_events": N_EVENTS,
@@ -131,19 +146,15 @@ def run(out_path: str) -> dict:
             .select("user_id").distinct().count() - 1,  # minus sentinel
             "watermark": WATERMARK,
             "n_buckets": N_BUCKETS,
-            "per_key": {k: v for k, v in perkey.items() if k != "alerts"},
             "key_packed": {k: v for k, v in packed.items() if k != "alerts"},
-            "packed_speedup": round(
-                packed["events_per_sec"] / perkey["events_per_sec"], 2
-            ),
-            "alert_parity": perkey["alerts"] == packed["alerts"],
-            "n_alerts": len(perkey["alerts"]),
+            "alert_parity": batch == packed["alerts"],
+            "n_alerts": len(packed["alerts"]),
         }
         print(json.dumps(rec, indent=1), flush=True)
-        assert rec["alert_parity"], "packed mode must emit identical alerts"
+        assert rec["alert_parity"], "event-time mode must match the batch plan"
         assert rec["n_alerts"] > 0, "hot keys must actually fire"
-        # the packed mode's state rows are bounded by the bucket count
-        # (+1 operator row slack), vs one blob per key-with-pending rows
+        # state rows are bounded by the bucket count (+1 operator row
+        # slack), not by the keys with pending rows
         assert rec["key_packed"]["state_rows_max"] <= N_BUCKETS + 1
         rec["all_assertions_pass"] = True
         with open(out_path, "w") as fh:
@@ -157,6 +168,6 @@ def run(out_path: str) -> dict:
 
 if __name__ == "__main__":
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default="STRESS_r05_eventtime.json")
+    ap.add_argument("--out", default="STRESS_eventtime.json")
     args = ap.parse_args()
     run(args.out)

@@ -344,9 +344,9 @@ def run(out_path: str, sf_dir: str = "/root/testdata/sf0.1") -> dict:
     ).localCheckpoint(eager=True)
     rec["batch_alerts"] = batch_alerts.count()
 
-    for mode, backend, wm in (
-        ("arrival_bucketed", "bucketed", None),
-        ("event_time_bucketed", "event_time_bucketed", DEFAULT_WATERMARK),
+    for mode, wm in (
+        ("arrival_bucketed", None),
+        ("event_time_bucketed", DEFAULT_WATERMARK),
     ):
         out = f"{root}/alerts_{mode}"
         stream = read_file_stream(
@@ -355,7 +355,7 @@ def run(out_path: str, sf_dir: str = "/root/testdata/sf0.1") -> dict:
         )
         alerts = compile_rules_streaming(
             stream, DEFAULT_RULES, key_field="user_id", time_col="ts",
-            order_cols=("event_id",), backend=backend,
+            order_cols=("event_id",), event_time=wm is not None,
         )
         t0 = time.time()
         q = (
